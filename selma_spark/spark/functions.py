@@ -4,81 +4,79 @@ Gives pure-SQL users the rewrite capability:
 
     SELECT selma_sanitize(html, 'relaxed') FROM pages
     SELECT selma_extract_text(html) FROM pages
+    SELECT selma_main_content(html) FROM pages
 
-Both are arrow-vectorized pandas UDFs (one Rewriter per (worker, config),
-cached module-level — the per-executor handler-table reuse the reference
-leaves as a TODO, reference rewriter.rs:330,363)."""
+All three are scalar pandas UDFs on the kernels of pipeline.py, built
+once per task (the per-executor handler-table reuse the reference leaves
+as a TODO, reference rewriter.rs:330,363). ``selma_sanitize`` keeps one
+rewrite_kernel per config name seen in the task, so it gets the same
+sanitize-only span memo as the mapInArrow path; ``selma_extract_text``
+runs the kernel over DEFAULT + TextBreaker (no memo: handler paths are
+never memoized); ``selma_main_content`` runs the collector kernel with
+one DensityTextExtractor reset per row. NULL html stays NULL and
+``<``-free text passes through unchanged.
+
+The scalar form, not the iterator-of-series form, is deliberate: Spark
+evaluates each iterator UDF in its own ArrowEvalPython node (one more
+Python worker and arrow round trip per UDF in a query), while scalar
+pandas UDFs in one SELECT share one node and one worker."""
 
 from __future__ import annotations
 
 import pandas as pd
+from pyspark import TaskContext
 from pyspark.sql import SparkSession
 
-_REWRITER_CACHE: dict = {}
+from ..extract import DensityTextExtractor, TextBreaker
+from ..sanitizer import DEFAULT
+from .pipeline import collect_kernel, resolve_config, rewrite_kernel
+
+# (task attempt id, kernels by key): the Python worker outlives its
+# tasks, so kernels are dropped when the next task starts
+_task = [None, {}]
 
 
-def _rewriter_for(config_name: str):
-    rw = _REWRITER_CACHE.get(config_name)
-    if rw is None:
-        from ..rewriter import Rewriter  # noqa: PLC0415
-        from ..sanitizer import BUILTIN_CONFIGS  # noqa: PLC0415
-
-        rw = Rewriter(sanitizer=BUILTIN_CONFIGS[config_name.lower()])
-        _REWRITER_CACHE[config_name] = rw
-    return rw
-
-
-def _extractor_rewriter():
-    rw = _REWRITER_CACHE.get("__extract__")
-    if rw is None:
-        from ..extract import TextBreaker  # noqa: PLC0415
-        from ..rewriter import Rewriter  # noqa: PLC0415
-        from ..sanitizer import DEFAULT  # noqa: PLC0415
-
-        rw = Rewriter(sanitizer=DEFAULT, handlers=[TextBreaker()])
-        _REWRITER_CACHE["__extract__"] = rw
-    return rw
+def _kernel(key, build):
+    """The kernel ``build()`` for the running task, built on first use."""
+    tid = TaskContext.get().taskAttemptId()
+    if _task[0] != tid:
+        _task[:] = [tid, {}]
+    kernels = _task[1]
+    if key not in kernels:
+        kernels[key] = build()
+    return kernels[key]
 
 
-def _sanitize_impl(html: pd.Series, config: pd.Series) -> pd.Series:
-    out = []
-    for h, c in zip(html, config):
-        if h is None:
-            out.append(None)
-        elif "<" not in h:
-            out.append(h)
-        else:
-            out.append(_rewriter_for(c or "default").rewrite(h))
-    return pd.Series(out)
+def _apply(html: pd.Series, fn) -> pd.Series:
+    return pd.Series([h if h is None or "<" not in h else fn(h) for h in html])
 
 
-def _extract_text_impl(html: pd.Series) -> pd.Series:
-    out = []
-    for h in html:
-        if h is None:
-            out.append(None)
-        elif "<" not in h:
-            out.append(h)
-        else:
-            out.append(_extractor_rewriter().rewrite(h))
-    return pd.Series(out)
+def _sanitize(html: pd.Series, config: pd.Series) -> pd.Series:
+    by_name = _kernel("sanitize", dict)  # one kernel per config name
+
+    def rewrite(h, c):
+        rw = by_name.get(c)
+        if rw is None:
+            rw = by_name[c] = rewrite_kernel(resolve_config(c or "default"))
+        return rw(h)
+
+    return pd.Series([
+        h if h is None or "<" not in h else rewrite(h, c)
+        for h, c in zip(html, config)
+    ])
 
 
-def _main_content_impl(html: pd.Series) -> pd.Series:
-    from ..extract import DensityTextExtractor  # noqa: PLC0415
-    from ..rewriter import Rewriter  # noqa: PLC0415
+def _extract_text(html: pd.Series) -> pd.Series:
+    return _apply(html, _kernel(
+        "extract_text", lambda: rewrite_kernel(DEFAULT, [TextBreaker()])
+    ))
 
-    out = []
-    for h in html:
-        if h is None:
-            out.append(None)
-        elif "<" not in h:
-            out.append(h)
-        else:
-            ex = DensityTextExtractor()  # fresh: per-document block state
-            Rewriter(sanitizer=None, handlers=[ex]).rewrite(h)
-            out.append(ex.main_text)
-    return pd.Series(out)
+
+def _main_content(html: pd.Series) -> pd.Series:
+    collect = _kernel(
+        "main_content", lambda: collect_kernel(DensityTextExtractor())
+    )
+    return _apply(html, lambda h: collect(h).main_text)
 
 
 def register_sql_functions(spark: SparkSession) -> None:
@@ -89,10 +87,6 @@ def register_sql_functions(spark: SparkSession) -> None:
     from .shipping import ensure_shipped
 
     ensure_shipped(spark)
-    spark.udf.register("selma_sanitize", pandas_udf(_sanitize_impl, "string"))
-    spark.udf.register(
-        "selma_extract_text", pandas_udf(_extract_text_impl, "string")
-    )
-    spark.udf.register(
-        "selma_main_content", pandas_udf(_main_content_impl, "string")
-    )
+    spark.udf.register("selma_sanitize", pandas_udf(_sanitize, "string"))
+    spark.udf.register("selma_extract_text", pandas_udf(_extract_text, "string"))
+    spark.udf.register("selma_main_content", pandas_udf(_main_content, "string"))

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .datagen import DOC_SCHEMA
-from .pipeline import make_rewrite_fn
+from .pipeline import rewrite_documents
 
 
 def read_document_stream(
@@ -47,12 +47,8 @@ def stream_rewrite(
     foreachBatch gives exactly-once-per-batch output with the batch id
     recorded as lineage (restart-safe: Structured Streaming replays the
     failed batch and the write is idempotent by batch_id directory)."""
-    from .shipping import ensure_shipped
-
-    ensure_shipped(spark)
-    stream = read_document_stream(spark, input_dir)
-    rewritten = stream.mapInArrow(
-        make_rewrite_fn(config, handlers_factory), schema=stream.schema
+    rewritten = rewrite_documents(
+        read_document_stream(spark, input_dir), config, handlers_factory
     )
 
     out_path = f"{output_dir}/documents"
@@ -157,9 +153,9 @@ def stream_dedup_documents(
         .parquet(input_dir)
     )
     # per-span fingerprint covers kind + text + media_ref, with NULL
-    # text disambiguated from '' (the same null-vs-empty collision fixed
-    # in rewrite_documents_dedup) — two distinct media-only docs must
-    # NOT collide and be dropped as duplicates
+    # text disambiguated from '' (md5 of coalesce(text, '') would collide
+    # them) — two distinct media-only docs must NOT collide and be
+    # dropped as duplicates
     span_fp = F.transform(
         "spans",
         lambda s: F.concat_ws(

@@ -1,14 +1,16 @@
 """Content extraction + large-fixture robustness (reference:
 test/selma_maliciousness_test.rb:167-276)."""
 
-import pathlib
-
+from fixture_docs import (
+    SIDEBAR_LINKS,
+    deleting_content_page,
+    docs_page,
+    document_sm,
+)
 from selma_spark import sanitizer as S
 from selma_spark.extract import ContentExtractor, TextBreaker
 from selma_spark.rewriter import Rewriter
 from selma_spark.sanitizer import deep_merge
-
-FIXTURES = pathlib.Path("/root/reference/test/fixtures")
 
 
 def test_content_extractor_basic():
@@ -28,18 +30,17 @@ def test_content_extractor_basic():
 
 
 def test_extractor_does_not_halt_on_real_docs_fixture():
-    html = (FIXTURES / "docs.html").read_text(encoding="utf-8", errors="replace")
+    html = docs_page()
     cfg = deep_merge(dict(S.RELAXED), {"allow_doctype": False})
     ex = ContentExtractor()
     out = Rewriter(sanitizer=cfg, handlers=[ex]).rewrite(html)
     assert isinstance(out, str)
     assert ex.title != ""
+    assert ex.title == "Getting Started | Astro Docs"
 
 
 def test_deleting_content_fixture_is_stable():
-    html = (FIXTURES / "deleting_content.html").read_text(
-        encoding="utf-8", errors="replace"
-    )
+    html = deleting_content_page()
     cfg = deep_merge(
         dict(S.RELAXED), {"allow_comments": False, "allow_doctype": False}
     )
@@ -116,13 +117,11 @@ def test_density_extractor_on_reference_fixture():
     from selma_spark.extract import DensityTextExtractor
     from selma_spark.rewriter import Rewriter
 
-    sm = open(
-        "/root/reference/test/benchmark/html/document-sm.html",
-        encoding="utf-8", errors="replace",
-    ).read()
+    sm = document_sm()
     ex = DensityTextExtractor()
     Rewriter(sanitizer=None, handlers=[ex]).rewrite(sm)
     # real prose survives; the nav sidebar (pure links) does not
     assert len(ex.blocks) > 5
     assert "Nokogiri" in ex.main_text
     assert "installation" not in [b.lower() for b in ex.blocks]
+    assert not any(name in b for b in ex.blocks for name in SIDEBAR_LINKS)

@@ -15,6 +15,7 @@ from selma_spark.rewriter import Rewriter
 from selma_spark.spark.datagen import bench_spans, interleaved_spans
 from selma_spark.spark.pipeline import (
     bucketed,
+    resolve_config,
     rewrite_documents,
     run_pipeline,
     with_doc_bytes,
@@ -270,15 +271,30 @@ def test_run_pipeline_resumes_byte_weighted_across_partition_counts(spark):
 
 
 def test_oversized_docs_quarantined(spark):
-    docs = make_span_docs(spark)
+    """max_text_bytes counts UTF-8 bytes: every text span over the cap
+    passes through byte-identical (DEFAULT would otherwise strip its
+    tags), including a multibyte span whose CHARACTER count is within
+    the cap; spans within the cap are rewritten."""
+    wide = "<x>中文字</x>"  # 10 characters, 16 UTF-8 bytes
+    assert len(wide) <= 10 < len(wide.encode())
+    docs = make_span_docs(spark).unionByName(spark.createDataFrame(
+        [("wide", [("text", wide, None, 0), ("text", "<i>y</i>", None, 1)])],
+        make_span_docs(spark).schema,
+    ))
     inputs = {r["doc_id"]: r["spans"] for r in docs.collect()}
     out = rewrite_documents(docs, "default", max_text_bytes=10).collect()
-    # every text span longer than the cap passes through byte-identical
-    # (DEFAULT would otherwise strip all its tags)
+    rw = Rewriter(sanitizer=S.DEFAULT).rewrite
     for r in out:
         for s, orig in zip(r["spans"], inputs[r["doc_id"]]):
-            if s["kind"] == "text" and len(orig["text"] or "") > 10:
-                assert s["text"] == orig["text"]
+            t = orig["text"]
+            if s["kind"] != "text" or not t or "<" not in t:
+                assert s["text"] == t
+            elif len(t.encode()) > 10:
+                assert s["text"] == t
+            else:
+                assert s["text"] == rw(t)
+    wide_out = [r for r in out if r["doc_id"] == "wide"][0]["spans"]
+    assert [s["text"] for s in wide_out] == [wide, "y"]
 
 
 def test_on_error_keep_contains_failures(spark):
@@ -300,98 +316,18 @@ def test_on_error_keep_contains_failures(spark):
     out = rewrite_documents(
         docs, "relaxed", handlers_factory=boom_handlers, on_error="keep"
     )
-    assert out.count() == docs.count()
-
-
-def test_dedup_rewrite_matches_direct_path(spark):
-    """rewrite_documents_dedup (distinct-payload elimination) must produce
-    span-sequence equality (kind, text, media_ref, order) with the narrow
-    per-document path on a corpus with duplicate texts."""
-    from selma_spark.spark.pipeline import rewrite_documents_dedup
-
-    base = interleaved_spans(
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    )
-    # replicate so distinct-elimination actually has duplicates to elide
-    docs = base.unionByName(
-        base.withColumn("doc_id", F.concat(F.col("doc_id"), F.lit("_copy")))
-    )
-    direct = {
-        r["doc_id"]: [tuple(s) for s in r["spans"]]
-        for r in rewrite_documents(docs, "relaxed").collect()
-    }
-    dedup = {
-        r["doc_id"]: [tuple(s) for s in r["spans"]]
-        for r in rewrite_documents_dedup(docs, "relaxed").collect()
-    }
-    assert direct == dedup
-    # broadcast-join flavor: same output, rewritten side broadcast
-    bcast = {
-        r["doc_id"]: [tuple(s) for s in r["spans"]]
-        for r in rewrite_documents_dedup(
-            docs, "relaxed", broadcast_rewritten=True
-        ).collect()
-    }
-    assert direct == bcast
-
-
-def test_memo_rewrite_matches_direct_path(spark):
-    """Broadcast-memo dedup variant (and its join-based fallback) must
-    match the narrow path span-for-span."""
-    from selma_spark.spark.pipeline import rewrite_documents_memo
-
-    base = interleaved_spans(
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    )
-    docs = base.unionByName(
-        base.withColumn("doc_id", F.concat(F.col("doc_id"), F.lit("_copy")))
-    )
-    direct = {
-        r["doc_id"]: [tuple(s) for s in r["spans"]]
-        for r in rewrite_documents(docs, "relaxed").collect()
-    }
-    memo = {
-        r["doc_id"]: [tuple(s) for s in r["spans"]]
-        for r in rewrite_documents_memo(docs, "relaxed").collect()
-    }
-    assert direct == memo
+    # quarantined docs pass through unmodified, span for span
+    inputs = {r["doc_id"]: r["spans"] for r in docs.collect()}
+    got = {r["doc_id"]: r["spans"] for r in out.collect()}
+    assert got == inputs
 
 
 def test_null_and_empty_spans_round_trip(spark):
     """Dirty-corpus shapes: a NULL spans array must stay NULL (the arrow
     reconstruction must propagate the list null mask), an empty array
-    stays empty, and a null text span passes through."""
-    schema = (
-        "doc_id string, spans array<struct<kind:string,text:string,"
-        "media_ref:string,offset:int>>"
-    )
-    rows = [
-        ("a", [("text", "<b>x</b>", None, 0)]),
-        ("b", None),
-        ("c", []),
-        ("d", [("text", None, None, 0)]),
-    ]
-    docs = spark.createDataFrame(rows, schema)
-    out = {
-        r["doc_id"]: r["spans"]
-        for r in rewrite_documents(docs, "default").collect()
-    }
-    assert out["b"] is None
-    assert out["c"] == []
-    assert out["d"][0]["text"] is None
-    assert out["a"][0]["text"] == "x"
-
-
-def test_dedup_and_memo_preserve_null_spans_and_null_text(spark):
-    """Dirty-corpus parity across ALL rewrite paths: NULL spans arrays
-    stay NULL (not []), empty stays empty, and a NULL-text span must not
-    be swapped with an empty-string-text span by the dedup join (the key
-    disambiguates NULL from '')."""
-    from selma_spark.spark.pipeline import (
-        rewrite_documents_dedup,
-        rewrite_documents_memo,
-    )
-
+    stays empty, a null text span passes through and stays NULL (not
+    ''), an empty-string text span stays '' (not NULL), and a media span
+    ahead of a text span keeps its place."""
     schema = (
         "doc_id string, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>"
@@ -405,53 +341,27 @@ def test_dedup_and_memo_preserve_null_spans_and_null_text(spark):
         ("f", [("media", None, "media://f/0", 0), ("text", "<i>y</i>", None, 1)]),
     ]
     docs = spark.createDataFrame(rows, schema)
-    expected = {
+    out = {
         r["doc_id"]: r["spans"]
         for r in rewrite_documents(docs, "default").collect()
     }
-    for variant in (rewrite_documents_dedup, rewrite_documents_memo):
-        out = {
-            r["doc_id"]: r["spans"]
-            for r in variant(docs, "default").collect()
-        }
-        assert out["b"] is None, variant.__name__
-        assert out["c"] == [], variant.__name__
-        assert out["d"][0]["text"] is None, variant.__name__
-        assert out["e"][0]["text"] == "", variant.__name__
-        assert out == expected, variant.__name__
-
-
-def test_memo_byte_cap_falls_back_before_collect(spark):
-    """The byte cap must route to the join-based variant (checked
-    distributedly) — and the fallback must still match the narrow path."""
-    from selma_spark.spark.pipeline import rewrite_documents_memo
-
-    docs = make_span_docs(spark)
-    direct = {
-        r["doc_id"]: [tuple(s) for s in r["spans"]]
-        for r in rewrite_documents(docs, "relaxed").collect()
-    }
-    out = {
-        r["doc_id"]: [tuple(s) for s in r["spans"]]
-        for r in rewrite_documents_memo(
-            docs, "relaxed", max_memo_bytes=8
-        ).collect()
-    }
-    assert out == direct
+    assert out["b"] is None
+    assert out["c"] == []
+    assert out["d"][0]["text"] is None
+    assert out["a"][0]["text"] == "x"
+    assert out["e"][0]["text"] == ""
+    assert [tuple(s) for s in out["f"]] == [
+        ("media", None, "media://f/0", 0), ("text", "y", None, 1),
+    ]
 
 
 def test_rewrite_paths_agree_on_random_dirty_corpus(spark):
     """Seeded random corpus exercising every dirty shape at once — NULL
     spans, empty arrays, NULL/empty text, media-only docs, duplicate
-    payloads, multibyte text, skewed sizes — must produce identical
-    span sequences through the narrow, dedup-join, and broadcast-memo
-    paths."""
+    payloads, multibyte text, skewed sizes — must produce the span
+    sequences of an independent per-span computation: a fresh Rewriter
+    for each text span, media and NULL spans passed through."""
     import random
-
-    from selma_spark.spark.pipeline import (
-        rewrite_documents_dedup,
-        rewrite_documents_memo,
-    )
 
     rng = random.Random(20260816)
     payload_pool = [
@@ -481,19 +391,26 @@ def test_rewrite_paths_agree_on_random_dirty_corpus(spark):
     )
     docs = spark.createDataFrame(rows, schema)
     for cfg in ("default", "relaxed"):
+
+        def span(kind, text, media_ref, off, cfg=cfg):
+            if kind == "text" and text is not None:
+                text = Rewriter(sanitizer=resolve_config(cfg)).rewrite(text)
+            return (kind, text, media_ref, off)
+
         expected = {
-            r["doc_id"]: r["spans"]
+            doc_id: None if spans is None else [span(*s) for s in spans]
+            for doc_id, spans in rows
+        }
+        got = {
+            r["doc_id"]: None if r["spans"] is None
+            else [tuple(s) for s in r["spans"]]
             for r in rewrite_documents(docs, cfg).collect()
         }
-        for variant in (rewrite_documents_dedup, rewrite_documents_memo):
-            got = {
-                r["doc_id"]: r["spans"] for r in variant(docs, cfg).collect()
-            }
-            assert got == expected, (cfg, variant.__name__)
+        assert got == expected, cfg
 
 
 def test_task_local_rewrite_memo_is_differential_and_bounded():
-    """r6: make_rewrite_fn memoizes sanitize-only rewrite outcomes for
+    """r6: rewrite_kernel memoizes sanitize-only rewrite outcomes for
     short spans within a task. Drive the arrow fn directly (no session):
     (a) repeated + distinct spans must be byte-identical to a fresh
     Rewriter per span, (b) blowing past _DOC_MEMO_CAP (clear-on-overflow)
@@ -647,6 +564,62 @@ def test_sql_function_main_content(spark):
         "text threshold for a main-content block easily.</p></div>') AS m"
     ).collect()[0]
     assert "real article body" in row["m"] and "Home" not in row["m"]
+
+
+def test_sql_functions_match_fresh_rewriters_across_rows(spark):
+    """All three SQL functions over ONE multi-row partition (one task, so
+    per-task kernels see every row): each row must equal a fresh per-row
+    Rewriter (a fresh DensityTextExtractor for main content). The same
+    page under 'default', 'relaxed', 'RELAXED' and NULL configs pins the
+    per-config isolation of selma_sanitize's span memo; the repeated
+    page pins the collector's reset() between rows. NULL html stays
+    NULL and '<'-free text passes through."""
+    from selma_spark.extract import DensityTextExtractor, TextBreaker
+    from selma_spark.spark.functions import register_sql_functions
+
+    page = (
+        "<div><a href=/1>Home</a> <a href=/2>About</a> <a href=/3>More</a>"
+        "</div><div><p onclick=x>The real article body, long enough to "
+        "clear the minimum text threshold for a <b>main-content</b> block."
+        "</p><table><tr><td>cell</td></tr></table><script>x()</script></div>"
+    )
+    rows = [
+        (0, page, "default"),
+        (1, None, "relaxed"),
+        (2, "plain text & more é", "RELAXED"),
+        (3, page, None),
+        (4, "<b onclick=x>bold</b><i>it</i>", "default"),
+        (5, page, "relaxed"),
+        (6, page, "RELAXED"),
+        (7, page, "default"),
+        (8, "<b onclick=x>bold</b><i>it</i>", None),
+    ]
+    spark.createDataFrame(
+        rows, "i int, html string, config string"
+    ).coalesce(1).createOrReplaceTempView("udf_pages")
+    register_sql_functions(spark)
+    got = {
+        r["i"]: (r["s"], r["e"], r["m"])
+        for r in spark.sql(
+            "SELECT i, selma_sanitize(html, config) AS s, "
+            "selma_extract_text(html) AS e, selma_main_content(html) AS m "
+            "FROM udf_pages"
+        ).collect()
+    }
+
+    def fresh(html, cfg):
+        if html is None or "<" not in html:
+            return (html,) * 3
+        ex = DensityTextExtractor()
+        Rewriter(sanitizer=None, handlers=[ex]).rewrite(html)
+        return (
+            Rewriter(sanitizer=resolve_config(cfg or "default")).rewrite(html),
+            Rewriter(sanitizer=S.DEFAULT, handlers=[TextBreaker()]).rewrite(html),
+            ex.main_text,
+        )
+
+    assert got == {i: fresh(h, c) for i, h, c in rows}
+    assert got[0][0] != got[5][0]  # the configs really differ on the page
 
 
 def test_spark_submit_pyfiles_launch(spark):
