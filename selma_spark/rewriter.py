@@ -88,7 +88,7 @@ class _Node:
         "modified", "removed_mode", "suppressing",
         "before_parts", "prepend_parts", "append_parts", "after_parts",
         "inner_content", "text_active", "end_tag_handlers", "end_removed",
-        "_byte_info", "_byte_cursor",
+        "_byte_info", "_byte_cursor", "end_emit",
     )
 
     def __init__(self, tok: tk.Token, byte_cursor=None):
@@ -120,6 +120,7 @@ class _Node:
         # attribute_source_location on every element of a non-ASCII
         # document stays O(n) overall instead of O(n^2) (ADVICE r2)
         self._byte_cursor = byte_cursor
+        self.end_emit = None  # full node: end-tag output decided at pop
 
     @property
     def _tok_attrs(self):
@@ -188,42 +189,41 @@ class _Node:
 
 
 class _InertNode:
-    """Lightweight open-stack entry for start tags that NO handler
-    selector can possibly match (fast-skip dispatch; sanitizer-off
-    passes only). Provides exactly what the VM pop paths and the
-    ancestor matcher read; every handler-mutable field is a class-level
-    immutable default — inert nodes are never handed to handlers, so
-    they are never written."""
+    """Open-stack entry for a start tag that NO handler selector can
+    match (fast-skip dispatch); never handed to handlers, so immutable
+    and shareable: one per tag name or raw tag slice, memoized on the
+    Rewriter. ``end_emit`` is what the element's end tag emits (True =
+    its raw slice, else a string, maybe empty). ``get_attr`` gives the
+    POST-sanitize attributes, derived lazily from ``src`` (a raw tag
+    slice, a Token, or None for none), so ancestor selectors see what a
+    full ``_Node`` shows."""
 
-    __slots__ = ("orig_name", "tag_name", "_tok", "_attrs")
+    __slots__ = ("orig_name", "tag_name", "suppressing", "end_emit",
+                 "_src", "_san", "_node")
 
-    suppressing = False
     text_active = None
-    end_tag_handlers = None
-    removed_mode = None
-    end_removed = False
-    renamed = False
-    modified = False
-    before_parts = None
-    prepend_parts = None
-    append_parts = None
-    after_parts = None
-    inner_content = None
 
-    def __init__(self, tok):
-        self.orig_name = self.tag_name = tok.name
-        self._tok = tok
-        self._attrs = None
+    def __init__(self, name, suppressing, end_emit, src, sanitizer):
+        self.orig_name = self.tag_name = name
+        self.suppressing = suppressing
+        self.end_emit = end_emit
+        self._src = src
+        self._san = sanitizer
+        self._node = None
 
     def get_attr(self, name):
         # ancestor-matcher protocol (descendant combinators inspect
-        # ancestors' attrs); read-only, so a dict is fine
-        a = self._attrs
-        if a is None:
-            ta = self._tok.attrs
-            # extraction already dedups first-wins, names unique
-            a = self._attrs = {t.name: t.value for t in ta} if ta else {}
-        return a.get(name)
+        # ancestors' attrs); a raw slice is one whole tag, so it lexes alone
+        node = self._node
+        if node is None:
+            src = self._src
+            if src is None:
+                return None
+            node = _Node(tk.tokenize(src)[0] if type(src) is str else src)
+            if self._san is not None:
+                _sanitize_element(self._san, node)
+            self._node = node
+        return node.get_attr(name)
 
 
 class Element:
@@ -437,7 +437,8 @@ class EndTag:
 
 
 class _CompiledHandler:
-    __slots__ = ("obj", "selector", "has_element", "has_text", "has_end_tag")
+    __slots__ = ("obj", "selector", "has_element", "has_text", "has_end_tag",
+                 "required_tags")
 
     def __init__(self, obj):
         sel = getattr(obj, "selector", None)
@@ -457,6 +458,14 @@ class _CompiledHandler:
         self.has_element = hasattr(obj, "handle_element")
         self.has_text = hasattr(obj, "handle_text_chunk")
         self.has_end_tag = hasattr(obj, "on_end_tag")
+        # tags some selector of this handler can match (None = any tag);
+        # start tags outside the union over a pass's handlers take its
+        # light branch (see _run_pass)
+        tags = frozenset()
+        for sel in (selector.element_selector, selector.text_selector):
+            if sel is not None and tags is not None:
+                tags = None if sel.required_tags is None else tags | sel.required_tags
+        self.required_tags = tags
 
 
 class Rewriter:
@@ -491,17 +500,17 @@ class Rewriter:
                     "<(?:%s)" % "|".join(disallowed), re.IGNORECASE
                 )
 
-        # r6: the _sanitize_element outcome memo (r5, formerly per pass)
-        # lives on the Rewriter: outcomes are a pure function of (raw tag
-        # bytes, frozen config), and a task-long Rewriter sees the same
-        # boilerplate start tags across MILLIONS of documents — cross-doc
-        # hits skip attr extraction + unescape/allowlist/protocol checks
-        # + re-serialization. Bounded by _SAN_MEMO_CAP (cleared, not
-        # LRU'd: adversarial all-distinct tags just degrade to r5's
-        # per-pass behavior). Concurrent rewrites share it safely: dict
-        # get/set are atomic under the GIL and both sides compute the
-        # identical value for a key, so a race is a benign double-compute.
-        self._san_memo = {} if sanitizer is not None else None
+        # Start-tag sanitize memo (see _sanitize_outcome): outcomes are a
+        # pure function of (raw tag bytes, frozen config), and a task-long
+        # Rewriter sees the same boilerplate start tags across MILLIONS of
+        # documents — cross-doc hits skip attr extraction +
+        # unescape/allowlist/protocol checks + re-serialization. Bounded
+        # by _SAN_MEMO_CAP (cleared, not LRU'd: adversarial all-distinct
+        # tags just degrade to per-pass behavior). Concurrent rewrites
+        # share it safely: dict get/set are atomic under the GIL and both
+        # sides compute the identical value for a key, so a race is a
+        # benign double-compute.
+        self._san_memo = {}
 
         self.max_allowed_memory_usage = None
         self.preallocated_parsing_buffer_size = None
@@ -554,10 +563,7 @@ class Rewriter:
                     gc.disable()
             _GC_PAUSE_DEPTH += 1
         try:
-            if self.handlers or self.sanitizer is None:
-                out = _run_pass(html, self.sanitizer, self.handlers)
-            else:
-                out = _sanitize_pass(html, self.sanitizer, self._san_memo)
+            out = _run_pass(html, self.sanitizer, self.handlers, self._san_memo)
             if self.sanitizer is not None and _needs_final_pass(
                 out, self._final_gate_re
             ):
@@ -660,287 +666,71 @@ def _cdata_extent(html: str, tok) -> tuple:
     return e + 3, True
 
 
-# cross-document _sanitize_element memo cap (r6): ~50k distinct raw tag
-# slices is far beyond any real page's tag vocabulary; clearing (not
+# start-tag sanitize memo cap (Rewriter._san_memo): ~50k distinct raw
+# tag slices is far beyond any real page's tag vocabulary; clearing (not
 # evicting) keeps the overflow path one branch
 _SAN_MEMO_CAP = 50_000
+_NO_TAGS = frozenset()  # required-tag union of a pass with no handlers
 
 
-def _sanitize_pass(html, sanitizer, san_memo=None) -> str:
-    """Sanitize-only fast path (no user handlers): semantically identical
-    to _run_pass with handlers=[] but without the handler-dispatch / node
-    machinery for trivial kept elements. Stack entries are light 4-lists
-    [orig_name, suppressing, end_raw, after_str] where end_raw: True=emit
-    the end tag raw, False=drop it, or a string to emit instead."""
-    tokens = tk.tokenize(html)
-    out: list[str] = []
-    emit = out.append
-    stack: list[list] = []
-    # open-element name counts: O(1) orphan-end-tag rejection (a flood
-    # of unmatched end tags over a deep stack would otherwise scan the
-    # whole stack per tag — an adversarial quadratic)
-    open_counts: dict = {}
-    suppress = 0
-    allow_comments = sanitizer.allow_comments
-    allow_doctype = sanitizer.allow_doctype
-    # inlined action_for: one dict .get per start tag instead of a
-    # method call + try/except frame (r6; None is a stored value meaning
-    # "allowed", so the unknown-tag default only fires on missing keys)
-    action_get = sanitizer._actions.get
-    unknown_action = sanitizer._actions["unknown"]
-
-    # contiguous passthrough tokens are emitted as ONE source slice
-    run_start = -1
-    run_end = -1
-    # _sanitize_element outcome memo (see the START_TAG node branch);
-    # keys are raw tag slices. r6: normally the REWRITER-level dict
-    # (cross-document hits — see Rewriter.__init__), capped at
-    # _SAN_MEMO_CAP; per-pass fallback for direct callers.
-    if san_memo is None:
-        san_memo = {}
-    elif len(san_memo) > _SAN_MEMO_CAP:
-        san_memo.clear()
-
-    def keep(tok):
-        nonlocal run_start, run_end
-        if tok.start == run_end:
-            run_end = tok.end
-        else:
-            if run_start >= 0:
-                emit(html[run_start:run_end])
-            run_start = tok.start
-            run_end = tok.end
-
-    def flush():
-        nonlocal run_start, run_end
-        if run_start >= 0:
-            emit(html[run_start:run_end])
-            run_start = -1
-            run_end = -1
-
-    TEXT, START_TAG, END_TAG, COMMENT = tk.TEXT, tk.START_TAG, tk.END_TAG, tk.COMMENT
-    # index-based so the foreign-content CDATA repair can re-lex and
-    # splice the remaining token stream (see the COMMENT branch); the
-    # re-lex is LAZY (chunked via lex_pos) so N repairs cost O(n), not
-    # O(N * n) — see _RELEX_CHUNK
-    ntok = len(tokens)
-    ti = 0
-    lex_pos = None  # byte pos to resume lazy lexing at (None = fully lexed)
-    n_html = len(html)
-    while True:
-        if ti >= ntok:
-            if lex_pos is None or lex_pos >= n_html:
-                break
-            tokens, lex_pos = tk.tokenize(
-                html, start=lex_pos, limit=_RELEX_CHUNK
-            )
-            ntok = len(tokens)
-            ti = 0
-            continue
-        tok = tokens[ti]
-        ti += 1
-        kind = tok.kind
-        if kind == TEXT:
-            # keep() inlined on the two hottest branches (TEXT and the
-            # attr-less kept start tag, ~80% of keep calls — r6): the
-            # closure call alone is ~70ns against a ~1.2us/token budget
-            if suppress == 0:
-                if tok.start == run_end:
-                    run_end = tok.end
-                else:
-                    if run_start >= 0:
-                        emit(html[run_start:run_end])
-                    run_start = tok.start
-                    run_end = tok.end
-            continue
-
-        if kind == START_TAG:
-            name = tok.name
-            action = action_get(name, unknown_action)
-            void = name in VOID_TAGS
-            no_end = void or tok.self_closing
-
-            # attr-less test WITHOUT forcing lazy extraction (r6): a
-            # non-None _ablob means the hot/batch lexer validated a
-            # non-empty attribute blob, so the tag HAS attrs — reading
-            # tok.attrs here would extract them even when the
-            # _sanitize_element memo below hits (where they are unused)
-            if action is None and tok._ablob is None and not tok._attrs \
-                    and name != "iframe":
-                # kept, untouched: raw passthrough (the common case)
-                if suppress == 0:
-                    if tok.start == run_end:
-                        run_end = tok.end
-                    else:
-                        if run_start >= 0:
-                            emit(html[run_start:run_end])
-                        run_start = tok.start
-                        run_end = tok.end
-                if not no_end:
-                    open_counts[name] = open_counts.get(name, 0) + 1
-                    stack.append([name, False, True, None])
-                continue
-
-            if action is not None:
-                remove_contents, wrap_ws = action
-                if remove_contents:
-                    if no_end:
-                        continue  # tag dropped, nothing to suppress
-                    open_counts[name] = open_counts.get(name, 0) + 1
-                    stack.append([name, True, False, None])
-                    suppress += 1
-                else:
-                    if wrap_ws and suppress == 0:
-                        flush()
-                        emit(" ")  # before (void: the single space)
-                    if not no_end:
-                        open_counts[name] = open_counts.get(name, 0) + 1
-                        stack.append(
-                            [name, False, False, " " if wrap_ws else None]
-                        )
-                continue
-
-            # kept element with attributes (or iframe): full node logic.
-            # _sanitize_element is a pure function of (raw tag bytes,
-            # frozen config) — no positional or stack state — so its
-            # OUTCOME is memoized per pass on the raw slice (r5): web
-            # corpora repeat start tags massively, and a hit skips attr
-            # extraction + unescape/allowlist/protocol checks +
-            # re-serialization entirely. Three outcomes: "content"
-            # (force-removed, suppress subtree), "keep" (raw passthrough
-            # — includes canonical-rebuild == source), ("emit", s,
-            # inner) (re-serialized, optional inner replacement).
-            raw = html[tok.start:tok.end]
-            hit = san_memo.get(raw)
-            if hit is None:
-                node = _Node(tok)
-                _sanitize_element(sanitizer, node)
-                if node.removed_mode == "content":
-                    hit = ("content", None, None)
-                elif node.modified or node.inner_content is not None:
-                    s = node.serialize_start()
-                    if node.inner_content is None and s == raw:
-                        # canonical rebuild == source bytes (already
-                        # double-quoted, lowercase, single-spaced): keep
-                        # the raw run contiguous instead of flushing
-                        hit = ("keep", None, None)
-                    else:
-                        hit = ("emit", s, node.inner_content)
-                else:
-                    hit = ("keep", None, None)
-                san_memo[raw] = hit
-            mode, s, inner = hit
-            if mode == "content":  # force-removed via <!-- attr
-                if not no_end:
-                    open_counts[name] = open_counts.get(name, 0) + 1
-                    stack.append([name, True, False, None])
-                    suppress += 1
-                continue
-            if suppress == 0:
-                if mode == "keep":
-                    keep(tok)
-                else:
-                    flush()
-                    emit(s)
-                    if inner is not None and not no_end:
-                        emit(inner)
-            if mode == "emit" and inner is not None and not no_end:
-                open_counts[name] = open_counts.get(name, 0) + 1
-                stack.append([name, True, True, None])
-                suppress += 1
-            elif not no_end:
-                open_counts[name] = open_counts.get(name, 0) + 1
-                stack.append([name, False, True, None])
-            continue
-
-        if kind == END_TAG:
-            name = tok.name
-            if not open_counts.get(name):
-                if suppress == 0:
-                    keep(tok)  # orphan end tag passes through
-                continue
-            for k in range(len(stack) - 1, -1, -1):
-                if stack[k][0] == name:
-                    idx = k
-                    break
-            for entry in stack[idx + 1 :]:
-                if entry[1]:
-                    suppress -= 1
-                open_counts[entry[0]] -= 1
-            closing = stack[idx]
-            open_counts[name] -= 1
-            del stack[idx:]
-            if closing[1]:
-                suppress -= 1
-            if suppress == 0:
-                if closing[2]:
-                    keep(tok)
-                if closing[3] is not None:
-                    flush()
-                    emit(closing[3])
-            continue
-
-        if kind == COMMENT:
-            # CDATA in an OPEN svg/math subtree is CHARACTER DATA, not a
-            # comment (same rule as _run_pass, and lexing must agree
-            # between the two passes — the sanitize-vs-VM differential
-            # fuzz pins it): emit verbatim regardless of allow_comments,
-            # repairing '>'-containing data to the ']]>' terminator and
-            # re-lexing the remainder.
-            if (
-                (open_counts.get("svg") or open_counts.get("math"))
-                and tok.end - tok.start >= 10
-                and html.startswith("<![CDATA[", tok.start, tok.end)
-            ):
-                cd_end, merged = _cdata_extent(html, tok)
-                if cd_end is not None:
-                    if merged:
-                        # drop the stale lookahead; the refill at the
-                        # loop top re-lexes lazily from cd_end
-                        tokens = ()
-                        ntok = 0
-                        ti = 0
-                        lex_pos = cd_end
-                    if suppress == 0:
-                        if cd_end == tok.end:
-                            keep(tok)
-                        else:
-                            flush()
-                            emit(html[tok.start:cd_end])
-                    continue
-            if allow_comments and suppress == 0:
-                keep(tok)
-            continue
-
-        # DOCTYPE
-        if allow_doctype and suppress == 0:
-            keep(tok)
-
-    flush()
-    return "".join(out)
+def _sanitize_outcome(sanitizer, tok, raw):
+    """Memo value for a start tag: (start, entry, sanitized). For the
+    light branch, ``start`` is what the tag emits (None = its raw slice)
+    and ``entry`` its shared stack entry (None when it opens no element);
+    for a full _Node, ``sanitized`` is the state _sanitize_element leaves
+    (removed_mode, modified, inner_content, before_parts, after_parts,
+    attrs). ``raw`` is the tag's slice when that is the memo key, None
+    when the key is the tag name (the entry then shows no attrs). A pure
+    function of the key and the frozen config."""
+    node = _Node(tok)
+    if sanitizer is not None:
+        _sanitize_element(sanitizer, node)
+    no_end = node.void or node.explicit_self_closing
+    mode = node.removed_mode
+    inner = node.inner_content
+    after = "".join(node.after_parts or ())
+    start = "".join(node.before_parts or ())
+    if mode is None:
+        start += node.serialize_start()
+        if inner is not None and not no_end:
+            start += inner
+    if no_end:
+        start += after
+        entry = None
+    else:
+        entry = _InertNode(
+            node.orig_name,
+            mode == "content" or (mode is None and inner is not None),
+            True if mode is None else after,
+            raw,
+            sanitizer,
+        )
+    sanitized = (mode, node.modified, inner, node.before_parts,
+                 node.after_parts, node._attrs)
+    return (None if start == tok.raw else start), entry, sanitized
 
 
-def _run_pass(html, sanitizer, handlers) -> str:
+def _run_pass(html, sanitizer, handlers, san_memo=None) -> str:
+    """The rewrite interpreter: one linear pass over the token stream
+    applying the sanitizer and then the handlers to each element (see the
+    module docstring). ``san_memo`` is the Rewriter's start-tag memo."""
     # batch-attr tokens; attribute_source_location lazily re-parses its
     # own tag with span tracking on the rare access (Element facade)
     tokens = tk.tokenize(html)
     out: list[str] = []
     emit = out.append
-    stack: list[_Node] = []       # matching stack (implicit pops)
-    # open-element name counts: O(1) orphan-end-tag rejection (see
-    # _sanitize_pass — same adversarial-quadratic guard)
+    stack: list = []              # matching stack (implicit pops)
+    # open-element name counts: O(1) orphan-end-tag rejection (a flood
+    # of unmatched end tags over a deep stack would otherwise scan the
+    # whole stack per tag — an adversarial quadratic)
     open_counts: dict = {}
-    ruby_stack: list[str] = []    # Selma-style ancestors stack
     suppress = 0
-    # handler_idx -> count of OPEN elements whose text selector matched:
-    # maintained on push/pop so text tokens read the active set O(1)
-    # instead of re-scanning the open stack per chunk
-    tactive_counts: dict = {}
 
     # contiguous untouched tokens are emitted as ONE source slice
     run_start = -1
     run_end = -1
 
+    # inlined copies, keep in step: TEXT, light start tag, light end tag
     def keep(start, end):
         nonlocal run_start, run_end
         if start == run_end:
@@ -963,47 +753,63 @@ def _run_pass(html, sanitizer, handlers) -> str:
     # lazy re-lex state after a merged CDATA repair (see _RELEX_CHUNK)
     lex_pos = None
     n_html = len(html)
-    # shared per-pass byte-offset cursor for attribute_source_location
-    # (incremental prefix encodes — see _Node._byte_cursor)
-    byte_cursor = [None, 0, 0]
-    # flattened per-handler dispatch specs: selector/flag attribute
-    # chains resolved ONCE per pass instead of per element per handler
-    # (~9 attribute loads saved per start tag)
-    hspecs = [
-        (
-            h_idx,
-            h.obj.handle_element if h.has_element else None,
-            h.obj.on_end_tag if h.has_end_tag else None,
-            sel.required_tags if (sel := h.selector.element_selector) is not None else None,
-            sel.prefilter_complete if sel is not None else False,
-            sel.matches if sel is not None else None,
-            tsel.required_tags if (tsel := h.selector.text_selector) is not None else None,
-            tsel.prefilter_complete if tsel is not None else False,
-            tsel.matches if tsel is not None else None,
-        )
-        for h_idx, h in enumerate(handlers)
-    ]
-    # fast-skip dispatch: when the pass has NO sanitizer and EVERY
-    # handler selector (element and text) is tag-prefiltered, a start
-    # tag whose name is outside the union of required tags can match
-    # nothing — push a lightweight inert stack entry and skip the _Node
-    # + handler loop entirely. A handler CAN rename an element into the
-    # union, but only an element some selector matched can be renamed,
-    # and those always take the full path, so the skip is sound.
-    fast_skip = None
-    if sanitizer is None:
-        req_union: set | None = set()
+    # handler dispatch state, built only when there are handlers:
+    # - hspecs: flattened per-handler dispatch specs, selector/flag
+    #   attribute chains resolved ONCE per pass instead of per element
+    #   per handler (~9 attribute loads saved per start tag);
+    # - fast_skip: when EVERY handler selector (element and text) is
+    #   tag-prefiltered, a start tag whose name is outside the union of
+    #   required tags can match nothing, so only the sanitizer decides
+    #   it: it takes the light branch below and pushes a shared
+    #   _InertNode, skipping the _Node + handler loop. With no handlers
+    #   the union is empty and every tag is light. A handler CAN rename
+    #   an element into the union, but only an element some selector
+    #   matched can be renamed, and those always take the full path, so
+    #   the skip is sound;
+    # - byte_cursor: shared per-pass byte-offset cursor for
+    #   attribute_source_location (see _Node._byte_cursor);
+    # - ruby_stack: the Selma-style ancestors stack;
+    # - tactive_counts: handler_idx -> count of OPEN elements whose text
+    #   selector matched, maintained on push/pop so text tokens read the
+    #   active set O(1) instead of re-scanning the open stack per chunk.
+    # Without handlers nothing is pushed to the last two, so they stay ().
+    hspecs = ruby_stack = tactive_counts = ()
+    fast_skip: frozenset | None = _NO_TAGS
+    byte_cursor = None
+    if handlers:
+        hspecs = [
+            (
+                h_idx,
+                h.obj.handle_element if h.has_element else None,
+                h.obj.on_end_tag if h.has_end_tag else None,
+                sel.required_tags if (sel := h.selector.element_selector) is not None else None,
+                sel.prefilter_complete if sel is not None else False,
+                sel.matches if sel is not None else None,
+                tsel.required_tags if (tsel := h.selector.text_selector) is not None else None,
+                tsel.prefilter_complete if tsel is not None else False,
+                tsel.matches if tsel is not None else None,
+            )
+            for h_idx, h in enumerate(handlers)
+        ]
         for h in handlers:
-            for sel in (h.selector.element_selector, h.selector.text_selector):
-                if sel is None:
-                    continue
-                if sel.required_tags is None:
-                    req_union = None
-                    break
-                req_union |= sel.required_tags
-            if req_union is None:
+            if h.required_tags is None:
+                fast_skip = None
                 break
-        fast_skip = req_union
+            fast_skip = fast_skip | h.required_tags
+        byte_cursor = [None, 0, 0]
+        ruby_stack = []
+        tactive_counts = {}
+    # sanitizer action lookup, inlined: one dict .get per start tag with
+    # attrs (None is a stored value meaning "kept", so the unknown-tag
+    # default only fires on missing keys); no sanitizer keeps every tag
+    actions = sanitizer._actions if sanitizer is not None else {}
+    action_get = actions.get
+    unknown_action = actions.get("unknown")
+    # sanitize outcomes keyed on raw tag slices or on tag names (names
+    # never start with '<', so keys cannot collide); normally the
+    # Rewriter-level dict, per-pass for direct callers
+    if san_memo is None:
+        san_memo = {}
 
     # hoist kind constants: 2-3 module-attr lookups per token otherwise
     TEXT, START_TAG, END_TAG, COMMENT = tk.TEXT, tk.START_TAG, tk.END_TAG, tk.COMMENT
@@ -1031,128 +837,165 @@ def _run_pass(html, sanitizer, handlers) -> str:
             ti = 0
             continue
         tok = tokens[ti]
+        ti += 1
         kind = tok.kind
 
         if kind == TEXT:
-            # coalesce CONTIGUOUS text tokens (stray "<" fragments) into
-            # one slice. Contiguity must be checked: a dropped construct
-            # ("</>") between two text tokens leaves a source gap, and a
-            # blind start..end slice would resurrect the dropped bytes
-            # (caught by differential fuzz; _sanitize_pass is gap-safe)
-            t_start = tok.start
-            t_end = tok.end
-            text_type = tok.text_type
-            while (
-                ti + 1 < ntok
-                and tokens[ti + 1].kind == TEXT
-                and tokens[ti + 1].start == t_end
-            ):
-                ti += 1
-                t_end = tokens[ti].end
-            ti += 1
-            if tactive_counts:
-                active = tactive_counts  # keys = active handler indices
-                if active:
-                    chunk = TextChunk(html[t_start:t_end], text_type)
-                    dispatched = False
-                    for h_idx in sorted(active):
-                        h = handlers[h_idx]
-                        ignore = h.selector.ignore_text_within
-                        if ignore and any(
-                            name in ignore for name in ruby_stack
-                        ):
-                            continue
-                        if chunk.content == "":
-                            continue  # empty-chunk suppression (rewriter.rs:531-537)
-                        if not h.has_text:
-                            raise RewriteError(
-                                "handler with match_text_within must define "
-                                "handle_text_chunk"
-                            )
-                        h.obj.handle_text_chunk(chunk)
-                        dispatched = True
-                    if dispatched or chunk.before_parts or chunk.after_parts:
-                        if suppress == 0:
-                            flush()
-                            for p in chunk.before_parts:
-                                emit(p)
-                            if not chunk.removed:
-                                emit(chunk.content)
-                            for p in chunk.after_parts:
-                                emit(p)
+            if tactive_counts:  # keys = active handler indices
+                # coalesce CONTIGUOUS text tokens (stray "<" fragments)
+                # into one chunk. Contiguity must be checked: a dropped
+                # construct ("</>") between two text tokens leaves a
+                # source gap, and a blind start..end slice would
+                # resurrect the dropped bytes (caught by differential fuzz)
+                t_start = tok.start
+                t_end = tok.end
+                while (
+                    ti < ntok
+                    and tokens[ti].kind == TEXT
+                    and tokens[ti].start == t_end
+                ):
+                    t_end = tokens[ti].end
+                    ti += 1
+                chunk = TextChunk(html[t_start:t_end], tok.text_type)
+                dispatched = False
+                for h_idx in sorted(tactive_counts):
+                    h = handlers[h_idx]
+                    ignore = h.selector.ignore_text_within
+                    if ignore and any(
+                        name in ignore for name in ruby_stack
+                    ):
                         continue
+                    if chunk.content == "":
+                        continue  # empty-chunk suppression (rewriter.rs:531-537)
+                    if not h.has_text:
+                        raise RewriteError(
+                            "handler with match_text_within must define "
+                            "handle_text_chunk"
+                        )
+                    h.obj.handle_text_chunk(chunk)
+                    dispatched = True
+                if dispatched or chunk.before_parts or chunk.after_parts:
+                    if suppress == 0:
+                        flush()
+                        for p in chunk.before_parts:
+                            emit(p)
+                        if not chunk.removed:
+                            emit(chunk.content)
+                        for p in chunk.after_parts:
+                            emit(p)
+                elif suppress == 0:
+                    keep(t_start, t_end)
+                continue
             if suppress == 0:
-                # keep() inlined on the two hottest branches (TEXT and
-                # the inert fast-skip start tag — r6, same as
-                # _sanitize_pass): ~70ns closure call per token saved
-                if t_start == run_end:
-                    run_end = t_end
+                # keep() inlined (r6): ~70ns closure call per token saved
+                if tok.start == run_end:
+                    run_end = tok.end
                 else:
                     if run_start >= 0:
                         emit(html[run_start:run_end])
-                    run_start = t_start
-                    run_end = t_end
+                    run_start = tok.start
+                    run_end = tok.end
             continue
 
-        ti += 1
-
         if kind == START_TAG:
-            if fast_skip is not None and tok.name not in fast_skip:
-                # inert: emit verbatim, maintain the open stacks only
-                name = tok.name
-                void = name in VOID_TAGS
+            name = tok.name
+            light = fast_skip is not None and name not in fast_skip
+            if light or sanitizer is not None:
+                # the sanitizer's outcome, memoized. Attr test WITHOUT
+                # forcing lazy extraction: a non-None _ablob means the
+                # lexer validated a non-empty attribute blob
+                has_attrs = tok._ablob is not None or tok._attrs
+                if tok.self_closing or name == "iframe" or (
+                    has_attrs and action_get(name, unknown_action) is None
+                ):
+                    # kept with attrs, self-closing or iframe (whose inner
+                    # content embeds the tag): key on the raw slice
+                    key = raw = html[tok.start:tok.end]
+                else:
+                    # attr-less, or unwrapped/removed (the sanitizer never
+                    # reads their attrs): the outcome depends on the name
+                    key = name
+                    raw = None
+                hit = san_memo.get(key)
+                if hit is None:
+                    if len(san_memo) >= _SAN_MEMO_CAP:
+                        san_memo.clear()  # bounds memory within a pass too
+                    hit = san_memo[key] = _sanitize_outcome(sanitizer, tok, raw)
+                start, entry, sanitized = hit
+            if light:
+                # no handler can match: emit the memoized outcome and push
+                # its shared entry, skipping the _Node + handler loop
+                if handlers:
+                    if raw is None and has_attrs and entry is not None:
+                        # the shared entry shows no attrs; ancestor
+                        # selectors need this tag's own
+                        entry = _InertNode(name, entry.suppressing,
+                                           entry.end_emit, tok, sanitizer)
+                    if name not in VOID_TAGS:
+                        ruby_stack.append(name)
                 if suppress == 0:
-                    if tok.start == run_end:
-                        run_end = tok.end
-                    else:
-                        if run_start >= 0:
-                            emit(html[run_start:run_end])
-                        run_start = tok.start
-                        run_end = tok.end
-                if not (void or tok.self_closing):
+                    if start is None:
+                        # keep() inlined (r6), as in the TEXT branch
+                        if tok.start == run_end:
+                            run_end = tok.end
+                        else:
+                            if run_start >= 0:
+                                emit(html[run_start:run_end])
+                            run_start = tok.start
+                            run_end = tok.end
+                    elif start:
+                        flush()
+                        emit(start)
+                if entry is not None:
                     open_counts[name] = open_counts.get(name, 0) + 1
-                    stack.append(_InertNode(tok))
-                if not void:
-                    ruby_stack.append(name)
+                    stack.append(entry)
+                    if entry.suppressing:
+                        suppress += 1
                 continue
             node = _Node(tok, byte_cursor)
-            name = node.orig_name
-
             if sanitizer is not None:
-                _sanitize_element(sanitizer, node)
+                # replay the memoized _sanitize_element on this node; the
+                # lists are copied because handlers mutate them
+                (node.removed_mode, node.modified, node.inner_content,
+                 before, after, attrs) = sanitized
+                if before is not None:
+                    node.before_parts = list(before)
+                if after is not None:
+                    node.after_parts = list(after)
+                if attrs is not None:
+                    node._attrs = [list(a) for a in attrs]
 
-            if handlers:
-                for (h_idx, helem, hend, ereq, ecomp, ematch,
-                     treq, tcomp, tmatch) in hspecs:
-                    if ematch is not None and (
-                        ereq is None
-                        # node.tag_name read per handler: an earlier
-                        # handler's rename is visible to later matches
-                        or node.tag_name in ereq
-                    ) and (ecomp or ematch(node, stack)):
-                        if hend is not None and not node.void:
-                            if node.end_tag_handlers is None:
-                                node.end_tag_handlers = []
-                            node.end_tag_handlers.append(hend)
-                        if helem is not None:
-                            try:
-                                # ruby_stack is passed LIVE (it holds
-                                # exactly this element's ancestors during
-                                # dispatch); Element.ancestors copies on
-                                # access, so no per-element snapshot —
-                                # like the reference, an Element is only
-                                # valid inside its callback
-                                helem(Element(node, ruby_stack))
-                            except RewriteError:
-                                raise
-                            except Exception as exc:
-                                raise RewriteError(str(exc)) from exc
-                    if tmatch is not None and (
-                        treq is None or node.tag_name in treq
-                    ) and (tcomp or tmatch(node, stack)):
-                        if node.text_active is None:
-                            node.text_active = set()
-                        node.text_active.add(h_idx)
+            for (h_idx, helem, hend, ereq, ecomp, ematch,
+                 treq, tcomp, tmatch) in hspecs:
+                if ematch is not None and (
+                    ereq is None
+                    # node.tag_name read per handler: an earlier
+                    # handler's rename is visible to later matches
+                    or node.tag_name in ereq
+                ) and (ecomp or ematch(node, stack)):
+                    if hend is not None and not node.void:
+                        if node.end_tag_handlers is None:
+                            node.end_tag_handlers = []
+                        node.end_tag_handlers.append(hend)
+                    if helem is not None:
+                        try:
+                            # ruby_stack is passed LIVE (it holds
+                            # exactly this element's ancestors during
+                            # dispatch); Element.ancestors copies on
+                            # access, so no per-element snapshot —
+                            # like the reference, an Element is only
+                            # valid inside its callback
+                            helem(Element(node, ruby_stack))
+                        except RewriteError:
+                            raise
+                        except Exception as exc:
+                            raise RewriteError(str(exc)) from exc
+                if tmatch is not None and (
+                    treq is None or node.tag_name in treq
+                ) and (tcomp or tmatch(node, stack)):
+                    if node.text_active is None:
+                        node.text_active = set()
+                    node.text_active.add(h_idx)
 
             no_end_tag = node.void or node.explicit_self_closing
             emit_ok = suppress == 0
@@ -1231,6 +1074,27 @@ def _run_pass(html, sanitizer, handlers) -> str:
             closing = stack[idx]
             open_counts[name] -= 1
             del stack[idx:]
+            end_emit = closing.end_emit
+            if end_emit is not None:
+                # light entry: no handler state to unwind
+                if ruby_stack:
+                    ruby_stack.pop()
+                if closing.suppressing:
+                    suppress -= 1
+                if suppress == 0:
+                    if end_emit is True:
+                        # keep() inlined (r6), as in the TEXT branch
+                        if tok.start == run_end:
+                            run_end = tok.end
+                        else:
+                            if run_start >= 0:
+                                emit(html[run_start:run_end])
+                            run_start = tok.start
+                            run_end = tok.end
+                    elif end_emit:
+                        flush()
+                        emit(end_emit)
+                continue
             if closing.text_active:
                 for i in closing.text_active:
                     c = tactive_counts[i] - 1
@@ -1238,7 +1102,6 @@ def _run_pass(html, sanitizer, handlers) -> str:
                         tactive_counts[i] = c
                     else:
                         del tactive_counts[i]
-
             if closing.end_tag_handlers:
                 facade = EndTag(closing.tag_name, closing)
                 for cb in closing.end_tag_handlers:
@@ -1347,18 +1210,15 @@ def _run_pass(html, sanitizer, handlers) -> str:
                                 emit(p)
                             emit("]]>")
                     continue
-            if sanitizer is not None and not sanitizer.allow_comments:
-                pass  # removed
-            elif suppress == 0:
+            if suppress == 0 and (
+                sanitizer is None or sanitizer.allow_comments
+            ):
                 keep(tok.start, tok.end)
             continue
 
-        if kind == tk.DOCTYPE:
-            if sanitizer is not None and not sanitizer.allow_doctype:
-                pass
-            elif suppress == 0:
-                keep(tok.start, tok.end)
-            continue
+        # DOCTYPE
+        if suppress == 0 and (sanitizer is None or sanitizer.allow_doctype):
+            keep(tok.start, tok.end)
 
     flush()
     return "".join(out)

@@ -54,7 +54,7 @@ def topk_cosine(
     lambda trees cost ~0.1s of py4j per call — a third of this bench
     row's wall. The parsed operators are the identical tree
     (differential-pinned by test_topk_cosine_expr_matches_column_tree)."""
-    arr = "array(" + ",".join(_dlit(float(x)) for x in query) + ")"
+    arr = "array(" + ",".join(_dlit(float(x), "query vector") for x in query) + ")"
     dot = (
         f"aggregate(zip_with(embedding, {arr}, "
         "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, "
@@ -290,24 +290,25 @@ def _collect_centroids(embeddings: DataFrame, n_centroids: int):
     )
 
 
-def _dlit(v: float) -> str:
+def _dlit(v: float, what: str) -> str:
     """Exact SQL double literal: ``repr`` is the shortest decimal that
     round-trips to the same IEEE double, and Spark's parser converts
     decimal-with-``D`` via Double.parseDouble (correctly rounded) — the
-    parsed literal is bit-identical to ``F.lit(v)``."""
+    parsed literal is bit-identical to ``F.lit(v)``. ``what`` names the
+    vector in the error a non-finite value raises (e.g. "centroid 3")."""
     import math  # noqa: PLC0415
 
     if not math.isfinite(v):
-        raise ValueError(f"non-finite centroid component: {v!r}")
+        raise ValueError(f"non-finite {what} component: {v!r}")
     return repr(v) + "D"
 
 
-def _lit_best_struct(cents_rows, ne_name="_ne"):
+def _lit_best_struct(cents_rows):
     """array_max over per-centroid (round(cosine, 9), -cid) structs with
     the centroid table inlined as LITERALS (r6): the centroid norms are
     precomputed on the driver (same left-fold + sqrt as _norm — IEEE ops
     in the same order, so bit-identical) and the row's embedding norm is
-    hoisted into the ``ne_name`` column, computed ONCE instead of once
+    hoisted into the ``_ne`` column, computed ONCE instead of once
     per centroid. Same comparator as _argmax_assign's max(struct(c,
     nc)): highest cosine, ties -> smallest cid. Replaces the crossJoin +
     groupBy argmax with a single narrow projection — no exchange, no
@@ -330,14 +331,15 @@ def _lit_best_struct(cents_rows, ne_name="_ne"):
         for v in vec:
             acc += v * v
         cn = math.sqrt(acc)
-        arr = "array(" + ",".join(_dlit(v) for v in vec) + ")"
+        arr = "array(" + ",".join(_dlit(v, f"centroid {cid}") for v in vec) + ")"
         dot = (
             f"aggregate(zip_with(embedding, {arr}, "
             "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, "
             "(acc, v) -> acc + v)"
         )
+        cn_lit = _dlit(cn, f"centroid {cid} norm")
         parts.append(
-            f"named_struct('c', round({dot} / ({ne_name} * {_dlit(cn)}), 9),"
+            f"named_struct('c', round({dot} / (_ne * {cn_lit}), 9),"
             f" 'nc', {-cid})"
         )
     return F.expr("array_max(array(" + ",".join(parts) + "))")
@@ -395,13 +397,16 @@ def kmeans_refine(
             "(no seed centroids with vec_id < n_centroids)"
         )
     dim = len(rows[0][1])
-    for _ in range(rounds):
+    for rnd in range(rounds):
         # r6: assignment inlined per row against LITERAL centroids (one
         # narrow projection; embedding carried through, so the former
         # vec_id shuffle-join back to embeddings is gone) -> the ONLY
         # shuffle per round is the (cid, dim) partial-agg mean. Rounding
         # discipline unchanged: cosine 9-dec pre-argmax, centroid 6-dec.
-        assigned = _lit_assign(embeddings, rows, keep_embedding=True)
+        try:
+            assigned = _lit_assign(embeddings, rows, keep_embedding=True)
+        except ValueError as exc:  # a non-finite centroid: say which round
+            raise ValueError(f"kmeans round {rnd}: {exc}") from exc
         # per-dim means as 64 column aggregates on groupBy(cid) — no
         # posexplode row blow-up (n_vectors x dim rows) and no (cid, dim)
         # shuffle key; one codegen'd pass with map-side combine. avg =

@@ -245,9 +245,18 @@ def test_lit_best_struct_expr_matches_column_tree(spark):
         .collect()
     )
     assert old == new
-    # non-finite components must fail loudly, not emit invalid SQL
-    with pytest.raises(ValueError):
-        simsearch._dlit(float("nan"))
+    # non-finite components must fail loudly, not emit invalid SQL, and
+    # the error names the centroid (and, from kmeans_refine, the round)
+    with pytest.raises(ValueError, match="centroid 7 component: nan"):
+        simsearch._lit_best_struct([(3, [1.0, 0.0]), (7, [0.5, float("nan")])])
+    with pytest.raises(ValueError, match="centroid 7 norm component: inf"):
+        simsearch._lit_best_struct([(7, [1e200, 1e200])])
+    bad = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [float("nan"), 1.0])],
+        "vec_id long, embedding array<float>",
+    )
+    with pytest.raises(ValueError, match=r"kmeans round 0: .*centroid 1 "):
+        simsearch.kmeans_refine(bad, n_centroids=2, rounds=1)
 
 
 def test_topk_cosine_expr_matches_column_tree(spark):

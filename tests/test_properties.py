@@ -85,12 +85,13 @@ def test_tokenizer_is_lossless_modulo_dropped_constructs(html):
 @given(_fragments)
 @settings(max_examples=150, deadline=None)
 def test_sanitize_only_fast_path_equals_general_vm(html):
-    import selma_spark.rewriter as R
-    from selma_spark.sanitizer import Sanitizer
-
+    """The two paths of the one interpreter: with no handlers every start
+    tag takes the light (memoized sanitize) branch; a universal handler
+    sends every tag through the full _Node path. Byte-identical output."""
     for cfg in (S.DEFAULT, S.BASIC, S.RELAXED):
-        san = Sanitizer(cfg)
-        assert R._sanitize_pass(html, san) == R._run_pass(html, san, [])
+        light = Rewriter(sanitizer=cfg).rewrite(html)
+        full = Rewriter(sanitizer=cfg, handlers=[_Universal()]).rewrite(html)
+        assert light == full, (html, light, full)
 
 
 _attr_soup = st.lists(
@@ -122,7 +123,8 @@ def test_batch_attr_path_agrees_with_span_path(html):
 
 
 class _NeverMatches:
-    """Forces the handler-dispatch pass (_run_pass) without mutating."""
+    """A non-mutating handler whose selector never matches; its ``q``
+    prefilter keeps every other start tag on the light branch."""
 
     def selector(self):
         from selma_spark.selector import Selector
@@ -133,22 +135,11 @@ class _NeverMatches:
         raise AssertionError("selector must never match")
 
 
-@given(_fragments)
-@settings(max_examples=300, deadline=None)
-def test_sanitize_fast_path_equals_handler_path(html):
-    """_sanitize_pass (no-handler fast path) and _run_pass (handler
-    dispatch) are two implementations of the same sanitize semantics —
-    outputs must be byte-identical on any input."""
-    for cfg in (S.DEFAULT, S.RELAXED):
-        fast = Rewriter(sanitizer=cfg).rewrite(html)
-        slow = Rewriter(sanitizer=cfg, handlers=[_NeverMatches()]).rewrite(html)
-        assert fast == slow, (html, fast, slow)
-
-
 class _Universal:
     """A no-op universal element handler: its required_tags is None, so
-    its PRESENCE disables the inert fast-skip dispatch without changing
-    any output — the perfect differential switch for that path."""
+    its PRESENCE disables the light fast-skip dispatch without changing
+    any output — the differential switch between the light branch and
+    the full _Node path."""
 
     def selector(self):
         from selma_spark.selector import Selector
@@ -157,6 +148,24 @@ class _Universal:
 
     def handle_element(self, element):
         pass
+
+
+# one Rewriter per config for the whole run: its light-tag memo carries
+# outcomes across examples, so cross-document memo hits are compared too
+_WARM = {}
+
+
+@given(_fragments)
+@settings(max_examples=300, deadline=None)
+def test_sanitize_fast_path_equals_handler_path(html):
+    """Light branch (no handlers, warm cross-document memo) and full
+    _Node path (universal handler, fresh Rewriter) implement the same
+    sanitize semantics — outputs must be byte-identical on any input."""
+    for cfg in (S.DEFAULT, S.RELAXED):
+        warm = _WARM.setdefault(id(cfg), Rewriter(sanitizer=cfg))
+        fast = warm.rewrite(html)
+        slow = Rewriter(sanitizer=cfg, handlers=[_Universal()]).rewrite(html)
+        assert fast == slow, (html, fast, slow)
 
 
 def _mutating_handlers(log):
@@ -193,20 +202,21 @@ def _mutating_handlers(log):
 @given(_fragments)
 @settings(max_examples=300, deadline=None)
 def test_fast_skip_dispatch_is_invisible(html):
-    """Handlers-only passes take the inert fast-skip path for start tags
-    outside the required-tag union (r4). Adding a no-op universal
-    handler disables that path entirely; output AND handler side
-    effects must be byte-identical either way on ANY input."""
-    log_fast, log_slow = [], []
-    fast = Rewriter(
-        sanitizer=None, handlers=_mutating_handlers(log_fast)
-    ).rewrite(html)
-    slow = Rewriter(
-        sanitizer=None,
-        handlers=_mutating_handlers(log_slow) + [_Universal()],
-    ).rewrite(html)
-    assert fast == slow, (html, fast, slow)
-    assert log_fast == log_slow, (html, log_fast, log_slow)
+    """Start tags outside the handlers' required-tag union take the light
+    fast-skip branch, with or without a sanitizer. Adding a no-op
+    universal handler disables that branch entirely; output AND handler
+    side effects must be byte-identical either way on ANY input."""
+    for cfg in (None, S.DEFAULT, S.RELAXED):
+        log_fast, log_slow = [], []
+        fast = Rewriter(
+            sanitizer=cfg, handlers=_mutating_handlers(log_fast)
+        ).rewrite(html)
+        slow = Rewriter(
+            sanitizer=cfg,
+            handlers=_mutating_handlers(log_slow) + [_Universal()],
+        ).rewrite(html)
+        assert fast == slow, (cfg, html, fast, slow)
+        assert log_fast == log_slow, (cfg, html, log_fast, log_slow)
 
 
 def test_orphan_end_tag_flood_is_linear():
@@ -224,7 +234,11 @@ def test_orphan_end_tag_flood_is_linear():
 
     orphan = "<b>" * 20000 + "</i>" * 20000
     matched = "<b>" * 20000 + "</b>" * 20000
-    for cfg, handlers in ((S.RELAXED, []), (None, [_NeverMatches()])):
+    for cfg, handlers in (
+        (S.RELAXED, []),
+        (S.RELAXED, [_Universal()]),  # full-node end-tag path
+        (None, [_NeverMatches()]),
+    ):
         r = Rewriter(sanitizer=cfg, handlers=handlers)
         t0 = time.perf_counter()
         r.rewrite(matched)
@@ -245,11 +259,136 @@ def test_dropped_empty_end_tag_never_resurrects():
     import selma_spark.rewriter as R
     from selma_spark.sanitizer import Sanitizer
 
+    universal = [R._CompiledHandler(_Universal())]
     for html in ('a</>b', 'x</></>y', '1 < 2</>tail', "<b>t</>u</b>"):
         for cfg in (S.DEFAULT, S.RELAXED):
             san = Sanitizer(cfg)
-            assert R._sanitize_pass(html, san) == R._run_pass(html, san, [])
-            assert "</>" not in R._run_pass(html, san, [])
+            light = R._run_pass(html, san, [])
+            assert light == R._run_pass(html, san, universal)
+            assert "</>" not in light
+
+
+_ANCESTOR_CSS = ("div[onclick] b", "a[href] b")
+
+_ancestor_fragments = st.lists(
+    st.sampled_from([
+        "<div onclick='x'>", '<div onclick="1" id=q>', "<div>", "</div>",
+        '<a href="javascript:alert(1)">', '<a href="https://ok/">',
+        "<a href=' javascript:y'>", "<a>", "</a>", "<b>", "</b>",
+        "<b class=k>", "<p>", "</p>", "<span title=t>", "</span>",
+        "<script>s</script>", "<iframe src=x>", "</iframe>",
+        "<div onclick=1 <!--x>", "<br>", "text ", "<",
+    ]),
+    max_size=16,
+).map("".join)
+
+
+def _ancestor_attr_run(cfg, html, universal):
+    from selma_spark.selector import Selector
+
+    log = []
+
+    class Mark:
+        def __init__(self, css):
+            self.css = css
+
+        def selector(self):
+            return Selector(match_element=self.css)
+
+        def handle_element(self, el):
+            log.append((self.css, el.tag_name, tuple(el.ancestors)))
+            el.set_attribute("data-m", str(len(log)))
+
+    handlers = [Mark(css) for css in _ANCESTOR_CSS]
+    if universal:
+        handlers.append(_Universal())
+    return Rewriter(sanitizer=cfg, handlers=handlers).rewrite(html), log
+
+
+def _assert_ancestor_attrs_agree(html):
+    for cfg in (S.DEFAULT, S.RELAXED):
+        light = _ancestor_attr_run(cfg, html, universal=False)
+        full = _ancestor_attr_run(cfg, html, universal=True)
+        assert light == full, (html, light, full)
+
+
+@given(_ancestor_fragments)
+@settings(max_examples=300, deadline=None)
+def test_light_ancestors_expose_sanitized_attrs(html):
+    """Descendant selectors read the attributes of light stack entries
+    (tags no handler matches). Those must be the POST-sanitize attrs the
+    full _Node path shows: same output and handler log with and without
+    a universal handler."""
+    _assert_ancestor_attrs_agree(html)
+
+
+def test_light_ancestors_expose_sanitized_attrs_fixed():
+    for html in (
+        "<div onclick='x'><b>t</b></div>",
+        '<a href="javascript:alert(1)"><b>t</b></a>',
+        '<a href="https://ok/"><p><b>t</b></p></a>',
+        "<div onclick=1 <!--x><b>t</b></div>",
+        "<div onclick=1><span title=t><b>u</b></span></div><b>v</b>",
+    ):
+        _assert_ancestor_attrs_agree(html)
+    # RELAXED keeps div/a/b but strips onclick and the javascript: href,
+    # so only the https link's <b> may match (DEFAULT unwraps div/a/b,
+    # and an unwrapped element keeps its raw attrs on both paths)
+    out, log = _ancestor_attr_run(
+        S.RELAXED,
+        "<div onclick='x'><b>t</b></div><a href='javascript:y'><b>u</b></a>"
+        "<a href='https://ok/'><b>v</b></a>",
+        universal=False,
+    )
+    assert log == [("a[href] b", "b", ("a",))], log
+    assert out.count("data-m") == 1, out
+
+
+def test_repeated_tags_get_private_sanitized_state():
+    """The sanitize outcome of a start tag is memoized on its raw slice
+    and replayed onto every full _Node with that slice. Handlers mutate
+    the node's attrs and parts, so each node needs its own copies: a
+    shared list would carry one element's edits into the next."""
+    from selma_spark.selector import Selector
+
+    class Mark:
+        def selector(self):
+            return Selector(match_element="div, p")
+
+        def handle_element(self, el):
+            el.before("[", as_="text")
+            cls = el["class"]
+            if cls is not None:
+                el["class"] = cls + " y"
+
+    html = ('<div class=c>a</div><div class=c>b</div>'
+            '<p class="c">1</p><p class="c">2</p>')
+    expected = {
+        id(S.DEFAULT): " [a  [b  [1  [2 ",
+        id(S.RELAXED): '[<div class="c y">a</div>[<div class="c y">b</div>'
+                       '[<p class="c y">1</p>[<p class="c y">2</p>',
+    }
+    for cfg in (S.DEFAULT, S.RELAXED):
+        rw = Rewriter(sanitizer=cfg, handlers=[Mark()])
+        for _ in range(2):  # second call: every tag is a memo hit
+            assert rw.rewrite(html) == expected[id(cfg)]
+
+
+def test_sanitize_memo_is_bounded_within_a_pass(monkeypatch):
+    """The start-tag memo is capped on insert, so one document of
+    all-distinct tags cannot grow it past the cap; clearing it mid-pass
+    must not disturb the open elements already on the stack."""
+    import selma_spark.rewriter as R
+
+    monkeypatch.setattr(R, "_SAN_MEMO_CAP", 8)
+    html = "".join(f"<div title=t{i}><a href='/p{i}' onclick=x>" for i in range(40))
+    html += "text" + "</a></div>" * 40
+    for cfg in (S.DEFAULT, S.RELAXED):
+        rw = Rewriter(sanitizer=cfg)
+        out = rw.rewrite(html)
+        assert len(rw._san_memo) <= 8
+        full = Rewriter(sanitizer=cfg, handlers=[_Universal()]).rewrite(html)
+        assert out == full, (out, full)
 
 
 @given(st.data())
